@@ -20,6 +20,7 @@ import os
 import shutil
 import subprocess
 import sys
+import threading
 import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
@@ -105,7 +106,6 @@ def main():
     ap.add_argument("--trace", choices=["0", "1"], default="0")
     ap.add_argument("--light-rate", type=float, required=True)
     ap.add_argument("--heavy-rate", type=float, required=True)
-    ap.add_argument("--pin", action="store_true", help="rewrite pinned_browse.tsv (browse_mix)")
     a = ap.parse_args()
 
     for need in ("build.sbt", "src/main/scala/graft", "perfbench/build.sbt"):
@@ -125,35 +125,39 @@ def main():
         shutil.rmtree(scratch, ignore_errors=True)
 
 
+def relay(stream, out):
+    """Echo the JVM's '#' lines as they come and keep every line in out."""
+    for line in stream:
+        line = line.rstrip("\n")
+        out.append(line)
+        if not line.startswith("{"):
+            print(line, flush=True)
+
+
 def run(a, cp, digest, scratch):
-    cmd = ["java", f"-Xms{XMX}", f"-Xmx{XMX}", "-XX:+UseG1GC", "-XX:+AlwaysPreTouch", f"-Djava.io.tmpdir={scratch}",
+    cmd = ["java", f"-Xms{XMX}", f"-Xmx{XMX}", "-XX:+UseG1GC", f"-Djava.io.tmpdir={scratch}",
            "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"]
     cmd += [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in ADD_OPENS]
-    if a.pin:
-        cmd.append("-Dperfbench.pin=1")
     cmd += ["-cp", cp, "perfbench.Main", "--workload", a.workload, "--seed", str(a.seed),
             "--seconds", str(a.seconds), "--trace", a.trace, "--light-rate", str(a.light_rate),
             "--heavy-rate", str(a.heavy_rate), "--root", ROOT, "--scratch", scratch, "--xmx", XMX,
             "--commit", f"{git_commit()}/src-{digest[:12]}"]
     log = os.path.join(WORK, f"run-{a.workload}.log")
-    result = None
+    lines = []
     with open(log, "w") as err:
         p = subprocess.Popen(cmd, cwd=ROOT, stdout=subprocess.PIPE, stderr=err, text=True)
+        # Read stdout on a thread so that the deadline holds even when the
+        # JVM hangs without printing.
+        reader = threading.Thread(target=relay, args=(p.stdout, lines), daemon=True)
+        reader.start()
         try:
-            t0 = time.time()
-            for line in p.stdout:
-                line = line.rstrip("\n")
-                if line.startswith("{"):
-                    result = line
-                else:
-                    print(line, flush=True)
-                if time.time() - t0 > RUN_TIMEOUT_S:
-                    raise subprocess.TimeoutExpired(cmd, RUN_TIMEOUT_S)
-            rc = p.wait(timeout=max(1, RUN_TIMEOUT_S - (time.time() - t0)))
+            rc = p.wait(timeout=RUN_TIMEOUT_S)
         except subprocess.TimeoutExpired:
             p.kill()
             p.wait()
             fail(f"run exceeded {RUN_TIMEOUT_S} s; see {log}")
+        reader.join(timeout=10)
+    result = next((l for l in reversed(lines) if l.startswith("{")), None)
     if rc != 0 or result is None:
         with open(log) as f:
             sys.stderr.write(f.read()[-4000:])

@@ -11,25 +11,27 @@ import graft.{CacheScope, SparkEntry, Tables}
 
 /** browse_mix: one client runs a fixed list of oracle-gated gates from
   * `SparkEntry.queries` in a closed loop inside a warm JVM. Every result is
-  * materialised through the `noop` sink. The seed fixes the order of the
-  * list; the tables are the committed copy under data/sf0.01. */
+  * materialised through the `noop` sink. The list runs in a fixed order
+  * over the committed copy of the tables under data/sf0.01, so this
+  * workload's inputs do not depend on the seed. */
 object BrowseMix {
 
-  /** The exact-substring and MinHash near-duplicate gates. */
-  val Heavy: Seq[String] = Seq("q225_exact_substring", "q41_dedup_minhash")
-  /** Scan, join and text gates. */
-  val Light: Seq[String] = Seq("q04_agg_group", "q09_join_enrich", "q31_lang_id", "q32_text_quality",
-    "q172_gopher_rules")
-  val Gates: Seq[String] = Light ++ Heavy
-  /** Seconds of --seconds per timed pass (a warm pass takes about 5 s on
-    * a 4-CPU box). */
-  val PassSeconds = 4.0
+  /** Gates with a shuffle: grouped aggregate, join, MinHash dedup. */
+  val Heavy: Seq[String] = Seq("q04_agg_group", "q09_join_enrich", "q41_dedup_minhash")
+  /** Per-row text scans. */
+  val Light: Seq[String] = Seq("q31_lang_id", "q32_text_quality", "q172_gopher_rules")
+  /** The order every pass runs them in. */
+  val Gates: Seq[String] = Seq("q04_agg_group", "q09_join_enrich", "q31_lang_id", "q32_text_quality",
+    "q41_dedup_minhash", "q172_gopher_rules")
+  /** One timed pass per this many seconds of --seconds (a warm pass takes
+    * 1.5-3 s on a 4-CPU box). */
+  val PassSeconds = 2.5
+  /** At least this many timed passes, so every per-gate best-of has a
+    * second sample to fall back on. */
+  val MinPasses = 2
 
   def dataDir(ctx: Ctx): String = ctx.opts.root.resolve("perfbench/data/sf0.01").toString
   def pinnedPath(ctx: Ctx) = ctx.opts.root.resolve("perfbench/pinned_browse.tsv")
-
-  /** Gate order for this seed (Fisher-Yates on a seeded generator). */
-  def order(seed: Long): Seq[String] = new scala.util.Random(seed).shuffle(Gates)
 
   /** Order-independent digest of a result: row count and the sum of 64-bit
     * hashes of each row's canonical text (doubles to 6 significant digits,
@@ -84,18 +86,16 @@ object BrowseMix {
   }
 
   /** Materialise a gate through collect and compare its digest with the
-    * pinned value (the untimed warm-up pass). */
-  def check(ctx: Ctx, gate: String, pinned: Map[String, (Long, String)], pin: Boolean): Option[(Long, String)] =
+    * pinned value (the untimed warm-up pass). A mismatch prints both. */
+  def check(ctx: Ctx, gate: String, pinned: Map[String, (Long, String)]): Unit =
     try {
       val d = digest(SparkEntry.queries(gate)(ctx.spark, dataDir(ctx)).collect())
       CacheScope.release()
-      ctx.op(pin || pinned.get(gate).contains(d), s"$gate: digest $d, pinned ${pinned.get(gate)}")
-      Some(d)
+      ctx.op(pinned.get(gate).contains(d), s"$gate: digest $d, pinned ${pinned.get(gate)}")
     } catch {
       case NonFatal(e) =>
         try CacheScope.release() catch { case NonFatal(_) => () }
         ctx.op(ok = false, s"$gate check: $e")
-        None
     }
 
   def run(ctx: Ctx): Unit = {
@@ -114,56 +114,49 @@ object BrowseMix {
     ctx.metric("setup_s", sessionMs / 1000.0 + Stats.median(setups), "s")
     ctx.note(f"setup: session ${sessionMs / 1000.0}%.3f s from JVM start, table opens ${setups.map(s => f"$s%.3f").mkString(", ")} s")
 
-    val gates = order(o.seed)
-    ctx.note(s"gate order: ${gates.mkString(" ")}")
-    val pin = sys.props.get("perfbench.pin").isDefined
-    val pinned = if (pin) Map.empty[String, (Long, String)] else loadPinned(ctx)
+    val pinned = loadPinned(ctx)
     // Warm-up pass (untimed): JIT and codegen, and the output checks.
-    val digests = gates.flatMap(g => check(ctx, g, pinned, pin).map(g -> _)).toMap
-    ctx.note(s"warm-up pass checked ${digests.size} of ${gates.size} gates")
-    if (pin) {
-      val body = Gates.map(g => digests.get(g).map { case (n, h) => s"$g\t$n\t$h" }.getOrElse(s"# $g failed"))
-      Files.write(pinnedPath(ctx), ("# gate\trows\tdigest (perfbench BrowseMix.digest)\n" + body.mkString("\n") + "\n").getBytes("UTF-8"))
-      ctx.note(s"pinned ${digests.size} gates to ${pinnedPath(ctx)}")
-    }
-
-    // A second untimed pass through the noop sink: the first noop
-    // execution of each gate still sits on the steep part of the JIT
-    // warm-up curve.
-    gates.foreach(g => execute(ctx, g))
-    ctx.note("warm-up noop pass done")
+    val w0 = System.nanoTime()
+    Gates.foreach(g => check(ctx, g, pinned))
+    ctx.note(f"warm-up pass checked ${Gates.size} gates in ${(System.nanoTime() - w0) / 1e9}%.1f s")
+    ctx.heapCheckpoint()
 
     // Closed loop: a fixed number of passes over the list, one per
     // PassSeconds of --seconds, so that every gate runs equally often and
-    // every run does the same work.
-    val passes = math.max(1, math.ceil(o.seconds / PassSeconds).toInt)
+    // every run does the same work. Each gate's figure is its best pass:
+    // the first noop execution of a gate still sits on the JIT warm-up
+    // curve, and a pass that met a slow period of the host is not what a
+    // change to the engine moves.
+    val passes = math.max(MinPasses, math.ceil(o.seconds / PassSeconds).toInt)
     val walls = mutable.LinkedHashMap[String, mutable.ArrayBuffer[Double]]()
-    for (_ <- 1 to passes; g <- gates)
-      execute(ctx, g).foreach { case (w, _, _) => walls.getOrElseUpdate(g, mutable.ArrayBuffer()) += w }
-    val medians = walls.map { case (g, ws) => g -> Stats.median(ws) }
-    val mix = medians.values.sum
-    val rows = gates.map(g => pinned.get(g).orElse(digests.get(g)).map(_._1).getOrElse(0L)).sum
+    for (_ <- 1 to passes) {
+      for (g <- Gates)
+        execute(ctx, g).foreach { case (w, _, _) => walls.getOrElseUpdate(g, mutable.ArrayBuffer()) += w }
+      ctx.heapCheckpoint()
+    }
+    val best = walls.map { case (g, ws) => g -> ws.min }
+    val mix = best.values.sum
+    val rows = Gates.map(g => pinned.get(g).map(_._1).getOrElse(0L)).sum
     ctx.note(f"closed loop: $passes passes, ${walls.values.map(_.size).sum} gate executions, mix $mix%.3f s, $rows rows per pass")
-    medians.toSeq.sortBy(-_._2).foreach { case (g, m) => ctx.note(f"  $g%-28s median $m%.3f s of ${walls(g).map(w => f"$w%.3f").mkString(", ")}") }
-    if (medians.size == Gates.size) {
+    best.toSeq.sortBy(-_._2).foreach { case (g, m) => ctx.note(f"  $g%-28s best $m%.3f s of ${walls(g).map(w => f"$w%.3f").mkString(", ")}") }
+    if (best.size == Gates.size) {
       ctx.metric("mix_s", mix, "s")
       ctx.metric("max_rows_per_s", rows / mix, "rows/s")
     }
-    // Class percentiles over per-gate medians: one sample per gate, so one
-    // slow execution of a short gate does not decide them.
+    // Class percentiles over per-gate best times: one sample per gate.
     for ((label, cls) <- Seq("light" -> Light, "heavy" -> Heavy)) {
-      val xs = cls.flatMap(medians.get).map(_ * 1000.0).sorted.toArray
+      val xs = cls.flatMap(best.get).map(_ * 1000.0).sorted.toArray
       if (xs.length == cls.size) {
         ctx.metric(s"lat_p50_ms.$label", Stats.pct(xs, 50), "ms")
         ctx.metric(s"lat_p99_ms.$label", Stats.pct(xs, 99), "ms")
-        ctx.note(s"$label gates: percentiles over ${xs.length} per-gate medians (p99 is the slowest)")
+        ctx.note(s"$label gates: percentiles over ${xs.length} per-gate best times (p99 is the slowest)")
       }
     }
 
     if (o.trace) {
       // A traced pass between two untraced ones; per-layer numbers come
       // from the traced pass's gate spans, the overhead from all three.
-      def pass(): Double = gates.flatMap(g => execute(ctx, g).map(_._1)).sum
+      def pass(): Double = Gates.flatMap(g => execute(ctx, g).map(_._1)).sum
       val before = pass()
       ctx.tracer.attach(spark)
       val root = ctx.tracer.newId()
@@ -171,7 +164,7 @@ object BrowseMix {
       val spans = mutable.ArrayBuffer[Span]()
       var pending, releaseMs = 0.0
       var traced = 0.0
-      gates.foreach { g =>
+      Gates.foreach { g =>
         val t0 = System.currentTimeMillis()
         execute(ctx, g).foreach { case (w, p, r) => pending += p; releaseMs += r; traced += w }
         val s = Span(ctx.tracer.newId(), phase, "gate", g, t0, System.currentTimeMillis())
@@ -186,7 +179,7 @@ object BrowseMix {
       ctx.metric("cachescope.pending", pending, "count")
       ctx.metric("cachescope.release_ms", releaseMs, "ms")
       ctx.metric("trace.overhead_share", traced / ((before + after) / 2) - 1.0, "share")
-      medians.foreach { case (g, m) => ctx.metric(s"mix.$g.wall_s", m, "s") }
+      best.foreach { case (g, m) => ctx.metric(PerLayer.gateWall(g), m, "s") }
       PerLayer.fillMissing(ctx)
       ctx.tracer.writeJson(o.workDir.resolve(s"trace-browse_mix-${o.seed}.json"))
     }

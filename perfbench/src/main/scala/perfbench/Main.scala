@@ -61,6 +61,17 @@ final class Ctx(val opts: Opts) {
   def metric(name: String, value: Double, unit: String): Unit = metrics(name) = (value, unit)
   def note(s: String): Unit = println(f"# [${Main.sinceJvmStartMs() / 1000.0}%6.1f s] $s")
 
+  private var heapLive = 0.0
+
+  /** Collect fully, then note the heap in use: the live set at a quiet
+    * point between phases or passes. heap_live_mb is the largest one. */
+  def heapCheckpoint(): Unit = {
+    System.gc()
+    heapLive = math.max(heapLive, ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0)
+  }
+
+  def heapLiveMb: Double = heapLive
+
   /** Peak resident set of this process so far (VmHWM), MiB. */
   def peakRssMb(): Double = {
     val line = scala.io.Source.fromFile("/proc/self/status").getLines().find(_.startsWith("VmHWM:"))
@@ -74,7 +85,7 @@ object Main {
 
   /** Names and units of the metrics every run prints (BENCHMARK.json). */
   val EndToEnd: Seq[(String, String)] = Seq(
-    "setup_s" -> "s", "peak_rss_mb" -> "MB", "lat_p50_ms.light" -> "ms", "lat_p99_ms.light" -> "ms",
+    "setup_s" -> "s", "heap_live_mb" -> "MB", "lat_p50_ms.light" -> "ms", "lat_p99_ms.light" -> "ms",
     "lat_p50_ms.heavy" -> "ms", "lat_p99_ms.heavy" -> "ms")
 
   def parse(args: Array[String]): Opts = {
@@ -111,6 +122,7 @@ object Main {
       if (ctx.spark != null) ctx.spark.stop()
     }
     ctx.metric("peak_rss_mb", ctx.peakRssMb(), "MB")
+    ctx.metric("heap_live_mb", ctx.heapLiveMb, "MB")
     report(ctx)
   }
 

@@ -2,10 +2,11 @@ package perfbench
 
 /** The per-layer metrics a traced run prints (BENCHMARK.json `per_layer`).
   * Each workload prints all of them; a layer the workload does not touch
-  * reads 0 (see README.md for which metric moves on which workload).
-  * browse_mix also prints its CacheScope and per-gate metrics on the
-  * human-readable lines. */
+  * reads 0 (see README.md for which metric moves on which workload). */
 object PerLayer {
+
+  /** The queries layer: one best materialised wall time per browse gate. */
+  def gateWall(gate: String): String = s"mix.$gate.wall_s"
 
   val Names: Seq[(String, String)] = Seq(
     "sources.release_wait_ms" -> "ms", "sources.backlog_rows.max" -> "rows",
@@ -21,7 +22,9 @@ object PerLayer {
     "sched.in_job_ms" -> "ms", "driver.gap_ms" -> "ms",
     "exec.run_ms" -> "ms", "exec.cpu_ms" -> "ms", "exec.cpu_share" -> "share", "exec.gc_ms" -> "ms",
     "shuffle.read_bytes" -> "bytes", "shuffle.write_bytes" -> "bytes", "spill_bytes" -> "bytes",
-    "max_rows_per_s" -> "rows/s", "max_rows_per_s.local1" -> "rows/s", "trace.overhead_share" -> "share")
+    "cachescope.pending" -> "count", "cachescope.release_ms" -> "ms",
+    "max_rows_per_s" -> "rows/s", "max_rows_per_s.local1" -> "rows/s", "trace.overhead_share" -> "share") ++
+    BrowseMix.Gates.map(g => gateWall(g) -> "s")
 
   def unitOf(name: String): String = Names.find(_._1 == name).map(_._2).getOrElse("count")
 

@@ -14,9 +14,9 @@ import graft.sources.{RateConf, RateModulatedSource}
 import graft.streaming.{Pipelines, StreamOps}
 
 /** The two open-loop streaming workloads on the in-repo `graft-rate`
-  * source. Each run: set-up (three pipeline starts), a saturated phase in
-  * the source's deterministic mode, then an open-loop phase at the light
-  * and at the heavy offered rate in wall-clock mode. */
+  * source. Each run: set-up (three pipeline starts), then an open-loop
+  * phase at the light and at the heavy offered rate in wall-clock mode.
+  * Traced runs add saturated phases in the source's deterministic mode. */
 object StreamWorkloads {
 
   val Keys = 64                 // events are keyed by seq % Keys
@@ -24,6 +24,7 @@ object StreamWorkloads {
   val WindowMicros = 2000000L   // tumbling window
   val SaturatedCap = 50000L     // maxRecordsPerTrigger in the saturated phase
   val SaturatedBatches = 8      // minimum capped batches per saturated phase
+  val WarmupBatches = 4         // capped batches that warm an untraced run
   val WarmupSeconds = 1L        // logical seconds excluded from latency samples
   val Subject = "graft-rate-value"
   val AvroSchema: String =
@@ -231,16 +232,18 @@ object StreamWorkloads {
       took / 1000.0
     }
     ctx.metric("setup_s", sessionMs / 1000.0 + Stats.median(setups), "s")
+    ctx.heapCheckpoint()
     ctx.note(f"setup: session ${sessionMs / 1000.0}%.3f s from JVM start, pipeline starts ${setups.map(s => f"$s%.3f").mkString(", ")} s")
 
     val phaseSpans = scala.collection.mutable.ArrayBuffer[(Span, Vector[BatchObs])]()
-    def phase(name: String, rate: Double, cap: Option[Long], seconds: Double)(after: (Phase, Vector[BatchObs]) => Unit): Unit = {
+    def phase(name: String, rate: Double, cap: Option[Long], seconds: Double,
+        minBatches: Int = SaturatedBatches)(after: (Phase, Vector[BatchObs]) => Unit): Unit = {
       val s0 = System.currentTimeMillis()
       val p = startPhase(ctx, pipes, shape, name, rate, cap)
       Thread.sleep((seconds * 1000).toLong)
       // a capped phase runs at least SaturatedBatches full batches, however slow
-      cap.foreach(c => ctx.op(awaitRows(ctx, p, SaturatedBatches * c, 30000),
-        s"$name: fewer than $SaturatedBatches batches within 30 s"))
+      cap.foreach(c => ctx.op(awaitRows(ctx, p, minBatches * c, 30000),
+        s"$name: fewer than $minBatches batches within 30 s"))
       val bs = if (cap.isEmpty) {
         // open loop: let what was already released drain, then stop
         val anchor = Latency.anchorUpper(batchesOf(ctx, p)).getOrElse(p.startCallMs)
@@ -261,10 +264,11 @@ object StreamWorkloads {
         Map("rows" -> b.numInputRows.toDouble, "trigger_ms" -> b.triggerMs.toDouble))))
       phaseSpans += ((span, bs))
       after(p, bs)
+      ctx.heapCheckpoint()
     }
 
     val satSeconds = math.max(2.0, 0.3 * o.seconds)
-    val loopSeconds = math.max(3.0, 0.35 * o.seconds)
+    val loopSeconds = math.max(3.0, 0.5 * o.seconds)
 
     def saturated(name: String): Double = {
       var rate = 0.0
@@ -275,12 +279,22 @@ object StreamWorkloads {
       rate
     }
 
-    // Traced runs bracket the traced phases with two untraced saturated
-    // phases; the overhead compares the traced saturated rate with theirs.
+    // The saturated phase gives max_rows_per_s, a per-layer figure, so
+    // only traced runs have one. They bracket the traced phases with two
+    // untraced saturated phases; the overhead compares the traced
+    // saturated rate with theirs.
     val untraced = if (o.trace) Some(saturated("saturated_untraced_before")) else None
-    if (o.trace) ctx.tracer.attach(spark)
-    val satRate = saturated("saturated")
-    ctx.metric("max_rows_per_s", satRate, "rows/s")
+    // Untraced runs warm the measured code paths with a few full batches
+    // instead; the open-loop phases start right after them.
+    if (!o.trace) phase("warmup", SaturatedCap * 4.0, Some(SaturatedCap), 0.0, WarmupBatches) { (_, bs) =>
+      ctx.note(s"warm-up: ${bs.count(_.numInputRows > 0)} batches of $SaturatedCap rows")
+    }
+    val satRate = if (o.trace) {
+      ctx.tracer.attach(spark)
+      val r = saturated("saturated")
+      ctx.metric("max_rows_per_s", r, "rows/s")
+      r
+    } else 0.0
 
     val open = scala.collection.mutable.LinkedHashMap[String, (LatencySplit, Seq[(Double, Double)], Vector[BatchObs])]()
     for ((label, rate) <- Seq("light" -> o.lightRate, "heavy" -> o.heavyRate)) {
