@@ -5,7 +5,7 @@ package perfbench
   * reads 0 (see README.md for which metric moves on which workload). */
 object PerLayer {
 
-  /** The queries layer: one best materialised wall time per browse gate. */
+  /** The queries layer: the middle-half mean materialised wall time of each browse gate. */
   def gateWall(gate: String): String = s"mix.$gate.wall_s"
 
   val Names: Seq[(String, String)] = Seq(

@@ -16,6 +16,15 @@ object Stats {
     if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
   }
 
+  /** Interquartile mean: the mean of the middle half of the sample, after
+    * dropping the lowest and the highest quarter (n / 4 values each). */
+  def iqm(xs: Iterable[Double]): Double = {
+    val s = xs.toArray.sorted
+    require(s.nonEmpty, "interquartile mean of an empty sample")
+    val mid = s.slice(s.length / 4, s.length - s.length / 4)
+    mid.sum / mid.length
+  }
+
   /** Length of the union of closed intervals [start, end]. */
   def unionLength(intervals: Iterable[(Long, Long)]): Long = {
     var total = 0L

@@ -75,4 +75,10 @@ class LatencySpec extends AnyFunSuite {
     assert(Stats.pct(Array(5.0), 99) == 5.0)
     assert(Stats.unionLength(Seq((0L, 10L), (5L, 20L), (30L, 35L))) == 25L)
   }
+
+  test("the interquartile mean averages the middle half") {
+    // n = 10: drop two from each end, average the middle six
+    assert(Stats.iqm(Seq(9.0, 1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0, 100.0)) == 5.5)
+    assert(Stats.iqm(Seq(5.0)) == 5.0)
+  }
 }
